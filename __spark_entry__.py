@@ -5211,57 +5211,6 @@ QUERIES: dict[str, Callable] = {
     # driver-checked lead, then ascending last-green round. The
     # ledger-freshness test asserts this invariant; regenerate with
     #   python scripts/rotate_window.py
-    "sparql_agg_roundtrip": q_sparql_agg_roundtrip,  # never driver-checked
-    "decontaminate": q_decontaminate,  # last green r09
-    "corpus_report": q_corpus_report,  # last green r09
-    "embedding_near_pairs_probe2": q_embedding_near_pairs_probe2,  # last green r09
-    "cms_counts": q_cms_counts,  # last green r09
-    "bloom_decontaminate": q_bloom_decontaminate,  # last green r09
-    "kmv_distinct": q_kmv_distinct,  # last green r09
-    "kmv_grouped": q_kmv_grouped,  # last green r09
-    "hll_distinct": q_hll_distinct,  # last green r09
-    "pack_chunks": q_pack_chunks,  # last green r09
-    "chunk_spans": q_chunk_spans,  # last green r09
-    "sliding_windows": q_sliding_windows,  # last green r09
-    "hash_split_counts": q_hash_split_counts,  # last green r09
-    "extractor_suite": q_extractor_suite,  # last green r09
-    "filter_suite": q_filter_suite,  # last green r09
-    "semi_join_enrich": q_semi_join_enrich,  # last green r09
-    "value_quantiles": q_value_quantiles,  # last green r09
-    "stratified_sample": q_stratified_sample,  # last green r09
-    "weighted_mixture": q_weighted_mixture,  # last green r09
-    "dict_lookup": q_dict_lookup,  # last green r09
-    "grounding_retry": q_grounding_retry,  # last green r09
-    "point_lookup": q_point_lookup,  # last green r09
-    "kg_degree_distribution": q_kg_degree_distribution,  # last green r09
-    "shipping_priority": q_shipping_priority,  # last green r09
-    "quality_topk": q_quality_topk,  # last green r09
-    "sparql_negated_path": q_sparql_negated_path,  # last green r10
-    "sparql_construct_graph": q_sparql_construct_graph,  # last green r10
-    "sparql_modifiers": q_sparql_modifiers,  # last green r10
-    "sparql_ask_probe": q_sparql_ask_probe,  # last green r10
-    "sparql_bind": q_sparql_bind,  # last green r10
-    "sparql_group_concat": q_sparql_group_concat,  # last green r10
-    "sparql_path_star": q_sparql_path_star,  # last green r10
-    "sparql_group_count": q_sparql_group_count,  # last green r10
-    "sparql_group_having": q_sparql_group_having,  # last green r10
-    "selection_pipeline_tokens": q_selection_pipeline_tokens,  # last green r10
-    "png_features": q_png_features,  # last green r10
-    "png_phash_pairs": q_png_phash_pairs,  # last green r10
-    "sparql_not_exists": q_sparql_not_exists,  # last green r10
-    "ivf_topk": q_ivf_topk,  # last green r10
-    "embedding_near_pairs_ivf": q_embedding_near_pairs_ivf,  # last green r10
-    "media_frame_sample": q_media_frame_sample,  # last green r10
-    "media_resize_plan": q_media_resize_plan,  # last green r10
-    "rdf_reactions": q_rdf_reactions,  # last green r10
-    "kg_components": q_kg_components,  # last green r10
-    "dedup_fuzzy_clusters": q_dedup_fuzzy_clusters,  # last green r10
-    "dedup_lsh_verified": q_dedup_lsh_verified,  # last green r10
-    "dedup_exact": q_dedup_exact,  # last green r10
-    "minhash_signatures": q_minhash_signatures,  # last green r10
-    "relation_dispatch": q_relation_dispatch,  # last green r10
-    "kg_edge_list": q_kg_edge_list,  # last green r10
-    # ---- end of the driver's 50-query correctness window ----
     "kg_triples": q_kg_triples,  # last green r10
     "kg_descendants": q_kg_descendants,  # last green r10
     "events_hourly": q_events_hourly,  # last green r10
@@ -5312,6 +5261,7 @@ QUERIES: dict[str, Callable] = {
     "token_stats": q_token_stats,  # last green r11
     "doc_fingerprints": q_doc_fingerprints,  # last green r11
     "asof_join": q_asof_join,  # last green r11
+    # ---- end of the driver's 50-query correctness window ----
     "asof_join_forward": q_asof_join_forward,  # last green r11
     "interval_join": q_interval_join,  # last green r11
     "funnel_counts": q_funnel_counts,  # last green r11
@@ -5437,6 +5387,56 @@ QUERIES: dict[str, Callable] = {
     "lm_perplexity": q_lm_perplexity,  # last green r13
     "tfidf_top_terms": q_tfidf_top_terms,  # last green r13
     "dedup_quality_survivor": q_dedup_quality_survivor,  # last green r13
+    "sparql_agg_roundtrip": q_sparql_agg_roundtrip,  # last green r15
+    "decontaminate": q_decontaminate,  # last green r15
+    "corpus_report": q_corpus_report,  # last green r15
+    "embedding_near_pairs_probe2": q_embedding_near_pairs_probe2,  # last green r15
+    "cms_counts": q_cms_counts,  # last green r15
+    "bloom_decontaminate": q_bloom_decontaminate,  # last green r15
+    "kmv_distinct": q_kmv_distinct,  # last green r15
+    "kmv_grouped": q_kmv_grouped,  # last green r15
+    "hll_distinct": q_hll_distinct,  # last green r15
+    "pack_chunks": q_pack_chunks,  # last green r15
+    "chunk_spans": q_chunk_spans,  # last green r15
+    "sliding_windows": q_sliding_windows,  # last green r15
+    "hash_split_counts": q_hash_split_counts,  # last green r15
+    "extractor_suite": q_extractor_suite,  # last green r15
+    "filter_suite": q_filter_suite,  # last green r15
+    "semi_join_enrich": q_semi_join_enrich,  # last green r15
+    "value_quantiles": q_value_quantiles,  # last green r15
+    "stratified_sample": q_stratified_sample,  # last green r15
+    "weighted_mixture": q_weighted_mixture,  # last green r15
+    "dict_lookup": q_dict_lookup,  # last green r15
+    "grounding_retry": q_grounding_retry,  # last green r15
+    "point_lookup": q_point_lookup,  # last green r15
+    "kg_degree_distribution": q_kg_degree_distribution,  # last green r15
+    "shipping_priority": q_shipping_priority,  # last green r15
+    "quality_topk": q_quality_topk,  # last green r15
+    "sparql_negated_path": q_sparql_negated_path,  # last green r15
+    "sparql_construct_graph": q_sparql_construct_graph,  # last green r15
+    "sparql_modifiers": q_sparql_modifiers,  # last green r15
+    "sparql_ask_probe": q_sparql_ask_probe,  # last green r15
+    "sparql_bind": q_sparql_bind,  # last green r15
+    "sparql_group_concat": q_sparql_group_concat,  # last green r15
+    "sparql_path_star": q_sparql_path_star,  # last green r15
+    "sparql_group_count": q_sparql_group_count,  # last green r15
+    "sparql_group_having": q_sparql_group_having,  # last green r15
+    "selection_pipeline_tokens": q_selection_pipeline_tokens,  # last green r15
+    "png_features": q_png_features,  # last green r15
+    "png_phash_pairs": q_png_phash_pairs,  # last green r15
+    "sparql_not_exists": q_sparql_not_exists,  # last green r15
+    "ivf_topk": q_ivf_topk,  # last green r15
+    "embedding_near_pairs_ivf": q_embedding_near_pairs_ivf,  # last green r15
+    "media_frame_sample": q_media_frame_sample,  # last green r15
+    "media_resize_plan": q_media_resize_plan,  # last green r15
+    "rdf_reactions": q_rdf_reactions,  # last green r15
+    "kg_components": q_kg_components,  # last green r15
+    "dedup_fuzzy_clusters": q_dedup_fuzzy_clusters,  # last green r15
+    "dedup_lsh_verified": q_dedup_lsh_verified,  # last green r15
+    "dedup_exact": q_dedup_exact,  # last green r15
+    "minhash_signatures": q_minhash_signatures,  # last green r15
+    "relation_dispatch": q_relation_dispatch,  # last green r15
+    "kg_edge_list": q_kg_edge_list,  # last green r15
 }
 
 

@@ -14,18 +14,37 @@ Replaces the reference's SQLAlchemy engine/metadata layer:
 Scale notes
 -----------
 Tables are plain parquet directories: writes are distributed, reads get
-predicate pushdown + column pruning for free, and the same layout works on
-HDFS/S3 paths. Partition columns can be supplied per table (e.g. partition a
-100 TB edges table by source prefix). The provenance table is tiny and
-append-only; appends produce one small file per event, which is fine at any
-scale (compaction is a maintenance job, not a correctness concern).
+predicate pushdown + column pruning for free. Partition columns can be
+supplied per table (e.g. partition a 100 TB edges table by source prefix).
+The warehouse is a local or NFS directory: the catalog manages it with
+``os.makedirs``, ``os.walk``, ``os.replace`` and ``shutil.rmtree``.
+
+Provenance
+----------
+The provenance table is tiny and append-only, so ``store_action`` appends
+from the driver with pyarrow and launches no Spark job: each event is a
+one-row parquet file written under a dot-prefixed temporary name inside
+``_actions/`` and then renamed to ``part-<uuid>.parquet``. Spark and
+``table_exists`` skip dot-prefixed files, so a reader never sees a partial
+file. ``created`` is written as ``timestamp[us, tz=UTC]`` (parquet
+``TIMESTAMP(MICROS, isAdjustedToUTC=true)``), which Spark reads as
+``TimestampType`` -- the same type as the INT96 column of files that older
+versions appended through Spark, so both kinds of file read as one table.
+``created`` is strictly increasing across every ``Catalog`` in the process.
+One small file per event is fine at any scale; ``compact_table`` merges them.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import threading
+import time
+import uuid
 from typing import Iterable, Optional
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -45,6 +64,20 @@ ACTION_SCHEMA = T.StructType(
         T.StructField("created", T.TimestampType(), False),
     ]
 )
+
+_ARROW_ACTION_SCHEMA = pa.schema(
+    [
+        ("resource", pa.string()),
+        ("action", pa.string()),
+        ("created", pa.timestamp("us", tz="UTC")),
+    ]
+)
+
+# one clock for every Catalog in the process: ``created`` never ties or
+# steps backwards, so ``latest_actions`` always picks the last event; held
+# across the write too, so events become visible in ``created`` order
+_ACTION_LOCK = threading.Lock()
+_last_created_us = 0
 
 
 class Catalog:
@@ -131,10 +164,11 @@ class Catalog:
         if n_out >= len(files):
             return len(files)
         staging = path + ".__compacting__"
-        # localCheckpoint pins the data before the overwrite below removes
-        # the files the plan would lazily re-read
-        df = self.read_table(name).repartition(n_out).localCheckpoint(eager=True)
-        df.write.mode("overwrite").parquet(staging)
+        # the rewrite lands in the staging directory and has finished before
+        # the source files are removed, so nothing re-reads deleted files
+        self.read_table(name).repartition(n_out).write.mode("overwrite").parquet(
+            staging
+        )
         shutil.rmtree(path)
         os.rename(staging, path)
         self.store_action(name, "compact")
@@ -342,11 +376,31 @@ class Catalog:
 
     # -------------------------------------------------------------- provenance
     def store_action(self, resource: str, action: str) -> None:
-        """Append one provenance event (reference: ``models.py:70-113``)."""
-        row_df = self.spark.createDataFrame(
-            [(resource, action)], schema="resource string, action string"
-        ).withColumn("created", F.current_timestamp())
-        row_df.coalesce(1).write.mode("append").parquet(self.table_path(ACTIONS_TABLE))
+        """Append one provenance event (reference: ``models.py:70-113``).
+
+        Written on the driver with pyarrow -- no Spark job -- as a one-row
+        file: first to a dot-prefixed temporary name in ``_actions/``, then
+        ``os.replace``-d to ``part-<uuid>.parquet``, so readers see the whole
+        file or none of it. ``created`` is a UTC-adjusted microsecond
+        timestamp (a naive one would read back as ``TIMESTAMP_NTZ`` and clash
+        with the files Spark appended), bumped by 1 µs on a tie or a
+        backwards clock step so it is strictly increasing process-wide.
+        Needs a local or NFS warehouse, like the rest of the catalog.
+        """
+        global _last_created_us
+        path = self.table_path(ACTIONS_TABLE)
+        os.makedirs(path, exist_ok=True)
+        name = uuid.uuid4().hex
+        tmp = os.path.join(path, f"._{name}.tmp")
+        with _ACTION_LOCK:
+            created = max(time.time_ns() // 1000, _last_created_us + 1)
+            _last_created_us = created
+            row = pa.table(
+                {"resource": [resource], "action": [action], "created": [created]},
+                schema=_ARROW_ACTION_SCHEMA,
+            )
+            pq.write_table(row, tmp)
+            os.replace(tmp, os.path.join(path, f"part-{name}.parquet"))
 
     def actions(self) -> DataFrame:
         """All provenance events, newest first (``Action.ls``, ``models.py:116-123``)."""

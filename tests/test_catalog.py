@@ -66,6 +66,8 @@ def test_compact_table_preserves_content(spark, tmp_path):
     got = catalog.read_table("frag")
     assert got.count() == 1000
     assert got.agg({"v": "sum"}).collect()[0][0] == df.agg({"v": "sum"}).collect()[0][0]
+    # same rows as a multiset, not just the same count and sum
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, df.collect()))
     # provenance recorded
     acts = {(r["resource"], r["action"]) for r in catalog.actions().collect()}
     assert ("frag", "compact") in acts
@@ -232,3 +234,214 @@ def test_expire_partitions_hive_escaped_values(spark, tmp_path):
     left = cat.read_table("tagged")
     assert left.count() == 2
     assert {r.tag for r in left.select("tag").distinct().collect()} == {"a b"}
+
+
+# ------------------------------------------------- driver-side provenance log
+
+
+def _latest(cat):
+    return {
+        r["resource"]: (r["action"], r["created"])
+        for r in cat.latest_actions().collect()
+    }
+
+
+def test_created_strictly_increasing_across_catalogs(spark, warehouse):
+    """Two Catalogs over one warehouse share the process clock: 200 rapid
+    appends never tie or step backwards, so ``latest_actions`` picks the
+    last event of every resource."""
+    cats = [Catalog(spark, warehouse), Catalog(spark, warehouse)]
+    last = {}
+    for i in range(200):
+        resource, action = f"r{i % 7}", f"a{i}"
+        cats[i % 2].store_action(resource, action)
+        last[resource] = action
+    created = [
+        r["created"] for r in cats[0].actions().orderBy("created").collect()
+    ]
+    assert len(created) == 200
+    assert all(a < b for a, b in zip(created, created[1:]))
+    got = {res: act for res, (act, _) in _latest(cats[1]).items()}
+    assert got == last
+
+
+def test_created_bumps_clock_ties_and_backward_steps(spark, warehouse, monkeypatch):
+    """A frozen clock (ties) and a clock that steps backwards still give
+    strictly increasing ``created`` values, 1 µs apart."""
+    import datetime
+    import time
+    import types
+
+    import bio2bel_spark.catalog as catalog_mod
+
+    now = time.time_ns()
+    ticks = iter([now] * 4 + [now - 10**9] * 4)
+    monkeypatch.setattr(
+        catalog_mod, "time", types.SimpleNamespace(time_ns=lambda: next(ticks))
+    )
+    # restored on teardown, so later appends see the real clock again
+    monkeypatch.setattr(catalog_mod, "_last_created_us", 0)
+    cats = [Catalog(spark, warehouse), Catalog(spark, warehouse)]
+    for i in range(8):
+        cats[i % 2].store_action("clock", f"a{i}")
+    rows = cats[0].actions().orderBy("created").collect()
+    assert [r["action"] for r in rows] == [f"a{i}" for i in range(8)]
+    one_us = datetime.timedelta(microseconds=1)
+    assert [(r["created"] - rows[0]["created"]) // one_us for r in rows] == list(
+        range(8)
+    )
+    assert _latest(cats[1])["clock"][0] == "a7"
+
+
+def test_created_unique_under_concurrent_appends(spark, warehouse):
+    """Threads appending through two Catalogs never share a ``created``
+    value, and each thread's events keep their call order."""
+    import sys
+    import threading
+
+    cats = [Catalog(spark, warehouse), Catalog(spark, warehouse)]
+
+    def append(t):
+        for i in range(25):
+            cats[t % 2].store_action(f"t{t}", f"{i:02d}")
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=append, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(th.is_alive() for th in threads)
+    rows = cats[0].actions().orderBy("created").collect()
+    assert len(rows) == 200
+    assert len({r["created"] for r in rows}) == 200
+    for t in range(8):
+        mine = [r["action"] for r in rows if r["resource"] == f"t{t}"]
+        assert mine == [f"{i:02d}" for i in range(25)]
+
+
+def test_actions_read_spark_and_driver_written_files(spark, warehouse):
+    """A provenance table first appended by the Spark writer (INT96
+    ``created``) and then by the driver-side ``store_action`` reads back as
+    one table with ``created`` still a ``TimestampType``."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from bio2bel_spark.catalog import ACTIONS_TABLE
+
+    cat = Catalog(spark, warehouse)
+    (
+        spark.createDataFrame(
+            [("old", ACTION_POPULATE), ("both", ACTION_POPULATE)],
+            "resource string, action string",
+        )
+        .withColumn("created", F.current_timestamp())
+        .write.mode("append")
+        .parquet(cat.table_path(ACTIONS_TABLE))
+    )
+    cat.store_action("both", ACTION_DROP)
+    cat.store_action("new", ACTION_POPULATE)
+
+    acts = cat.actions()
+    assert acts.schema["created"].dataType == T.TimestampType()
+    rows = acts.collect()
+    assert [r["created"] for r in rows] == sorted(
+        (r["created"] for r in rows), reverse=True
+    )
+    assert sorted((r["resource"], r["action"]) for r in rows) == [
+        ("both", ACTION_DROP),
+        ("both", ACTION_POPULATE),
+        ("new", ACTION_POPULATE),
+        ("old", ACTION_POPULATE),
+    ]
+    assert cat.count_actions() == 4
+    latest = {res: act for res, (act, _) in _latest(cat).items()}
+    assert latest == {
+        "old": ACTION_POPULATE,
+        "both": ACTION_DROP,
+        "new": ACTION_POPULATE,
+    }
+
+
+def test_leftover_temporary_action_file_ignored(spark, warehouse):
+    """A crash between write and rename leaves a dot-prefixed ``._*.tmp``
+    file; neither ``table_exists`` nor ``read_table`` sees it."""
+    import os
+
+    from bio2bel_spark.catalog import ACTIONS_TABLE
+
+    cat = Catalog(spark, warehouse)
+    path = cat.table_path(ACTIONS_TABLE)
+    os.makedirs(path)
+    with open(os.path.join(path, "._partial.tmp"), "wb") as fh:
+        fh.write(b"PAR1 truncated")
+    assert not cat.table_exists(ACTIONS_TABLE)
+    assert cat.count_actions() == 0
+    cat.store_action("test", ACTION_POPULATE)
+    assert cat.table_exists(ACTIONS_TABLE)
+    assert cat.read_table(ACTIONS_TABLE).count() == 1
+    assert [r["resource"] for r in cat.actions().collect()] == ["test"]
+
+
+def test_compact_actions_keeps_latest(spark, warehouse):
+    from bio2bel_spark.catalog import ACTIONS_TABLE
+
+    cat = Catalog(spark, warehouse)
+    for i in range(12):
+        cat.store_action(f"r{i % 3}", f"a{i}")
+    before = _latest(cat)
+    # one compacted file plus the compaction's own event
+    assert cat.compact_table(ACTIONS_TABLE) == 2
+    after = _latest(cat)
+    # the compaction records its own event under the table's name
+    assert after.pop(ACTIONS_TABLE)[0] == "compact"
+    assert after == before
+
+
+def _jobs_launched(spark, fn):
+    """Run ``fn`` in a fresh job group; return the ids of the Spark jobs it
+    launched once the listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count guard")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_store_action_launches_no_spark_job(spark, warehouse):
+    cat = Catalog(spark, warehouse)
+    assert _jobs_launched(spark, lambda: cat.store_action("x", ACTION_POPULATE)) == []
+    # the guard itself sees jobs in the group
+    assert len(_jobs_launched(spark, lambda: spark.range(3).count())) >= 1
+
+
+def test_populate_launches_at_most_one_job_per_table(spark, warehouse):
+    """Provenance stays off the job path: populating a two-table dataset
+    costs no more jobs than it writes tables."""
+    from bio2bel_spark.dataset import Dataset
+
+    class TwoTables(Dataset, abstract=True):  # abstract: kept out of the registry
+        module_name = "jobcount"
+        tables = {"a": "id BIGINT", "b": "id BIGINT, twice BIGINT"}
+
+        def _populate_tables(self, **kwargs):
+            return {
+                "a": self.spark.range(10),
+                "b": self.spark.range(5).selectExpr("id", "id * 2 AS twice"),
+            }
+
+    ds = TwoTables(spark, warehouse)
+    jobs = _jobs_launched(spark, ds.populate)
+    assert len(jobs) <= len(TwoTables.tables)
+    assert ds.summarize() == {"a": 10, "b": 5}
+    assert [r["action"] for r in ds.catalog.actions().collect()] == [ACTION_POPULATE]
